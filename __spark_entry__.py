@@ -2717,7 +2717,7 @@ LIMIT {k}
 def _sloppy_sql(phrase: str, slop: int, ordered: bool = True) -> str:
     """DuckDB twin of ``Searcher.topk_phrase(slop>0)`` (``ordered=True``)
     / ``Searcher.topk_near_unordered`` (``ordered=False``): the
-    minimal-window sloppy matcher of ``_make_sloppy_range_scorer``,
+    minimal-window sloppy matcher of ``_make_sloppy_kernel``,
     evaluated relationally. Per query slot j an event stream of adjusted
     positions (``pos - j`` ordered, raw ``pos`` unordered); per event the
     latest position of every slot at-or-before it (windowed max, RANGE

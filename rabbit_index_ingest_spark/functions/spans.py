@@ -5,7 +5,7 @@ highlighter (functions/text.highlight_expr) would wrap every stray "slow"
 in a doc that matched "slow query" as a phrase. This module extracts the
 matched windows as TOKEN-POSITION spans plus the matched snippet, using
 the exact minimal-window model of the sloppy scorer
-(index/query._make_sloppy_range_scorer, ordered mode):
+(index/query._make_sloppy_kernel, ordered mode):
 
 * each query slot j contributes adjusted positions ``pos − j``;
 * for each event e (any slot's adjusted position, all slots present at or

@@ -330,9 +330,9 @@ def _term_buckets(spark: SparkSession, terms: list[str]) -> list[int]:
 class Searcher:
     """Bound query interface over the index tables.
 
-    ``deleted`` is the tombstone set of superseded doc_ids (upsert
-    semantics, SURVEY.md B7) — filtered before local/global top-k so
-    replaced docs can never surface.
+    ``deleted_df`` is the tombstone table of superseded doc_ids (upsert
+    semantics, SURVEY.md B7) — masked inside every scorer so replaced
+    docs can never surface.
     """
 
     def __init__(
@@ -350,9 +350,12 @@ class Searcher:
         analyzer: str = "simple",
         doc_stats: DataFrame | None = None,
     ):
-        """``deleted`` (small set, broadcast into scorer closures) or
-        ``deleted_df`` (a doc_id DataFrame, cogrouped per doc range — the
-        scale path for large tombstone tables); pass one or the other.
+        """Tombstones: ``deleted_df`` (a doc_id DataFrame, cogrouped per
+        doc range by every scorer — neither set ever leaves the cluster)
+        is the one tombstone source every reader sees. ``deleted`` (a
+        driver-side set of doc_ids) is a convenience: it becomes a small
+        doc_id DataFrame here, unioned with ``deleted_df`` when both are
+        given.
 
         ``probe_min_blocks`` gates the global-θ₀ seed probe (see
         ``_seed_theta0``): queries whose estimated decode volume is below
@@ -364,7 +367,14 @@ class Searcher:
         self.dictionary = dictionary
         self.n_docs = n_docs
         self.avgdl = avgdl
-        self.deleted = frozenset(deleted or ())
+        if deleted:
+            driver_set = spark.createDataFrame(
+                [(int(d),) for d in sorted(deleted)], "doc_id long"
+            )
+            deleted_df = (
+                driver_set if deleted_df is None
+                else deleted_df.select("doc_id").unionByName(driver_set)
+            )
         self.deleted_df = deleted_df
         self.range_bits = range_bits
         self.probe_min_blocks = probe_min_blocks
@@ -459,25 +469,59 @@ class Searcher:
         want = max(-(-est // 512), min(dp, -(-est // 64)))
         return max(1, min(nparts, n_ranges, want))
 
-    def _group_by_range(
+    def _run_per_range(
         self,
         sel: DataFrame,
         side: DataFrame | None,
         meta: dict[str, tuple[int, int, int]] | None,
-    ):
-        """(left, side) groupings for a per-range scorer: both inputs are
-        explicitly repartitioned by ``range_id`` to the data-sized task
-        count (``_scorer_partitions``), which the following
-        ``groupBy("range_id")`` reuses (hash partitioning on the group key
-        satisfies the grouped/cogrouped distribution requirement — ONE
-        exchange, exactly as before, at the right width). Per-range
-        results are partition-assignment-independent, so scores, ranks
-        and the blocks_skipped accumulator are unchanged."""
+        kernel,
+        allowed_present: bool = False,
+        skip_acc=None,
+    ) -> DataFrame:
+        """The one per-range scorer stage behind every block-max and
+        positional query: runs ``kernel(range_id, pdf, dead, allow) ->
+        (topk_pdf, blocks_skipped)`` once per doc range and returns the
+        local ``(doc_id, score)`` rows.
+
+        ``sel`` (the pruned block scan) and the ``side`` frame
+        (``_side_frame``) are explicitly repartitioned by ``range_id`` to
+        the data-sized task count (``_scorer_partitions``), which the
+        following ``groupBy("range_id")`` reuses (hash partitioning on the
+        group key satisfies the grouped/cogrouped distribution
+        requirement — ONE exchange at the right width). Without side rows
+        the kernel sees ``dead = allow = None``; with them both inputs
+        cogroup per range and the side rows decode to ``dead`` (kind 0:
+        tombstones ∪ must_not) and, when ``allowed_present``, ``allow``
+        (kind 1) doc_id arrays — a range with an active allow-list but no
+        allowed doc returns empty without calling the kernel. The kernel's
+        skip count goes to ``skip_acc`` (a SparkContext accumulator) when
+        one is given. Per-range results are partition-assignment-
+        independent, so scores, ranks and skip counts never depend on the
+        task count."""
+
+        def run(range_id, pdf, dead, allow) -> pd.DataFrame:
+            out, skipped = kernel(range_id, pdf, dead, allow)
+            if skip_acc is not None and skipped:
+                skip_acc.add(skipped)
+            return out
+
         n = self._scorer_partitions(meta)
-        left = sel.repartition(n, F.col("range_id")).groupBy("range_id")
+        grouped = sel.repartition(n, F.col("range_id")).groupBy("range_id")
         if side is None:
-            return left, None
-        return left, side.repartition(n, F.col("range_id")).groupBy("range_id")
+            return grouped.applyInPandas(
+                lambda key, pdf: run(key[0], pdf, None, None), TOPK_SCHEMA
+            )
+
+        def cogrouped(key, pdf: pd.DataFrame, side_pdf: pd.DataFrame):
+            ids = side_pdf["doc_id"].to_numpy(np.int64)
+            kind = side_pdf["kind"].to_numpy()
+            allow = ids[kind == 1] if allowed_present else None
+            if allow is not None and not len(allow):
+                return _empty_topk_pdf()  # nothing allowed in this range
+            return run(key[0], pdf, ids[kind == 0], allow)
+
+        side_g = side.repartition(n, F.col("range_id")).groupBy("range_id")
+        return grouped.cogroup(side_g).applyInPandas(cogrouped, TOPK_SCHEMA)
 
     def _plan(
         self, query_text: str
@@ -523,11 +567,10 @@ class Searcher:
         doc scoring < θ₀ can enter the global top-k. Exactness is
         preserved by construction.
 
-        Liveness of probed docs: against a driver-side ``deleted`` set the
-        mask is a numpy isin; against a distributed ``deleted_df`` table
-        the ≤ ~k·2 probed doc_ids are semi-joined against the tombstone
-        table in ONE tiny Spark job (collecting only probed∩deleted, which
-        is at most nprobe·BLOCK_SIZE rows) — so the seed survives upserts
+        Liveness of probed docs: the ≤ ~k·2 probed doc_ids are
+        semi-joined against the tombstone table in ONE tiny Spark job
+        (collecting only probed∩deleted, which is at most
+        nprobe·BLOCK_SIZE rows) — so the seed survives upserts
         and a 10^12-doc index with one tombstone still prunes every doc
         range from its first block (round-2 verdict item 1).
 
@@ -568,9 +611,7 @@ class Searcher:
             dls = codec.varbyte_decode(r["dl_bytes"])
             decoded.append((ids, tfs, dls))
         dead = None
-        if self.deleted:
-            dead = np.fromiter(self.deleted, dtype=np.int64)
-        elif self.deleted_df is not None and decoded:
+        if self.deleted_df is not None and decoded:
             # one tiny job: which of the ≤ nprobe·BLOCK_SIZE probed docs
             # are tombstoned? The PROBE side is broadcast (a few hundred
             # rows) and the tombstone table streams past it — never the
@@ -779,26 +820,13 @@ class Searcher:
             0.0 if allowed is not None or excluded is not None
             else self._seed_theta0(idfs, meta, blocks, k)
         )
-        side = self._side_frame(allowed, excluded)
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
+        kernel = _make_blockmax_kernel(
+            idfs, self.avgdl, k, self.range_bits, theta0=theta0
         )
-        if side is not None:
-            # tombstones/filters at scale: cogroup each doc-range's blocks
-            # with its side rows — neither set ever leaves the cluster
-            # (vs broadcasting a Python set, which caps at ~10^6 entries)
-            scorer = _make_range_scorer(
-                idfs, self.avgdl, k, self.range_bits, self.deleted,
-                cogrouped=True, skip_acc=skip_acc, theta0=theta0,
-                allowed_present=allowed is not None,
-            )
-            local = grouped.cogroup(side_g).applyInPandas(scorer, TOPK_SCHEMA)
-        else:
-            scorer = _make_range_scorer(
-                idfs, self.avgdl, k, self.range_bits, self.deleted,
-                skip_acc=skip_acc, theta0=theta0,
-            )
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS), self._side_frame(allowed, excluded),
+            meta, kernel, allowed is not None, skip_acc,
+        )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_dismax(
@@ -836,22 +864,14 @@ class Searcher:
             0.0 if allowed is not None or excluded is not None
             else self._seed_theta0(idfs, meta, blocks, k)
         )
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, self.deleted,
-            cogrouped=side is not None, skip_acc=skip_acc, theta0=theta0,
-            allowed_present=allowed is not None,
+        kernel = _make_blockmax_kernel(
+            idfs, self.avgdl, k, self.range_bits, theta0=theta0,
             tie_breaker=float(tie_breaker),
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS), self._side_frame(allowed, excluded),
+            meta, kernel, allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_dismax_dataframe(
@@ -989,7 +1009,7 @@ class Searcher:
         term key of the shared index, so the scorer runs the SAME exact
         MaxScore kernel with per-clause idf/avgdl — best_fields adds the
         group tracker (θ over group-dismax partials, SUM upper bound for
-        skips; exactness per ``_make_range_scorer``). The θ₀ seed stays
+        skips; exactness per ``_make_blockmax_kernel``). The θ₀ seed stays
         valid: any probed single-clause partial lower-bounds its field sum,
         which lower-bounds both combines. Composes with
         ``allowed``/``excluded`` like every other mode."""
@@ -1011,23 +1031,16 @@ class Searcher:
             0.0 if allowed is not None or excluded is not None
             else self._seed_theta0(idfs, meta, blocks, k, avgdls=avgdls)
         )
-        side = self._side_frame(allowed, excluded)
         tb = float(tie_breaker) if mode == "best_fields" else None
-        scorer = _make_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, self.deleted,
-            cogrouped=side is not None, skip_acc=skip_acc, theta0=theta0,
-            allowed_present=allowed is not None, tie_breaker=tb,
-            avgdls=avgdls, groups=groups if tb is not None else None,
+        kernel = _make_blockmax_kernel(
+            idfs, self.avgdl, k, self.range_bits, theta0=theta0,
+            tie_breaker=tb, avgdls=avgdls,
+            groups=groups if tb is not None else None,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS), self._side_frame(allowed, excluded),
+            meta, kernel, allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_multimatch_dataframe(
@@ -1147,21 +1160,13 @@ class Searcher:
                 .distinct()
             )
             blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_conjunctive_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, order, self.deleted,
-            allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        kernel = _make_conjunctive_kernel(
+            idfs, self.avgdl, k, self.range_bits, order
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS), self._side_frame(allowed, excluded),
+            meta, kernel, allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_msm(
@@ -1240,21 +1245,13 @@ class Searcher:
             .select("range_id")
         )
         blocks = blocks.join(viable_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_msm_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, order, msm, self.deleted,
-            allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        kernel = _make_msm_kernel(
+            idfs, self.avgdl, k, self.range_bits, order, msm
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS), self._side_frame(allowed, excluded),
+            meta, kernel, allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_terms_set(
@@ -1410,7 +1407,7 @@ class Searcher:
         ``topk_prefix`` for the two rewrites' contracts.
 
         constant_score runs the per-range early-terminating scorer
-        (``_make_constscore_range_scorer``): the result is doc_id-
+        (``_make_constscore_kernel``): the result is doc_id-
         ascending, so each range stops decoding after its first ``k``
         live/allowed distinct docs instead of decoding the whole
         expansion set (round-4 verdict: the one query path left with
@@ -1430,24 +1427,14 @@ class Searcher:
         blocks = self.postings.where(
             F.col("bucket").isin(_term_buckets(self.spark, terms))
         ).where(F.col("term").isin(terms))
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_constscore_range_scorer(
-            k, self.range_bits, self.deleted,
-            allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
-        )
         # expansion terms carry no df (expand_* return terms only) —
         # meta=None sizes by range count, the right bound for this
         # early-terminating O(k)-per-range scorer
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, None
+        kernel = _make_constscore_kernel(k, self.range_bits)
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS), self._side_frame(allowed, excluded),
+            None, kernel, allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.asc("doc_id")).limit(k)
 
     def topk_match_bool_prefix(
@@ -1749,7 +1736,7 @@ class Searcher:
         expansion's idf.
 
         Runs on the generalized multi-slot block-max range scorer
-        (``_make_multiphrase_range_scorer``): pass-1 doc candidates must
+        (``_make_multiphrase_kernel``): pass-1 doc candidates must
         hold every fixed term AND at least one expansion (per-group
         union), pass-2 intersects per-slot position keys — the expansion
         slot is the sorted union of its members' shifted keys. Decoded
@@ -1779,46 +1766,44 @@ class Searcher:
         # pass-2 slots: one per query offset; the last holds the or-set
         slots = [(i, [t]) for i, t in enumerate(fixed)]
         slots.append((len(fixed), sorted(exps)))
-        all_terms = sorted(set(uniq_fixed + exps))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, all_terms))
-        ).where(F.col("term").isin(all_terms))
-        if len(groups) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term").isin(groups[0]))
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_multiphrase_range_scorer(
-            idf_q, self.avgdl, k, self.range_bits, groups, slots,
-            self.deleted, allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        blocks = self._rare_pruned_blocks(
+            sorted(set(uniq_fixed + exps)), groups[0]
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
+        kernel = _make_multiphrase_kernel(
+            idf_q, self.avgdl, k, self.range_bits, groups, slots
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS, "pos_bytes"),
+            self._side_frame(allowed, excluded), meta, kernel,
+            allowed is not None, skip_acc,
+        )
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # ---------------- boolean / filtered / phrase retrieval ----------------
 
+    def _rare_pruned_blocks(self, terms: list[str], rare: list[str]) -> DataFrame:
+        """Term/bucket-pruned block scan of ``terms`` for the all-terms-
+        required positional scorers: unless ``rare`` (the rarest term, or
+        group of terms) is all of ``terms``, every block semi-joins the
+        range_ids holding a ``rare`` block — pure block metadata, no
+        decode — since no other range can hold a match."""
+        blocks = self.postings.where(
+            F.col("bucket").isin(_term_buckets(self.spark, terms))
+        ).where(F.col("term").isin(terms))
+        if set(rare) == set(terms):
+            return blocks
+        rare_ranges = (
+            blocks.where(F.col("term").isin(rare)).select("range_id").distinct()
+        )
+        return blocks.join(rare_ranges, "range_id", "left_semi")
+
     def _mask_deleted(self, flat: DataFrame) -> DataFrame:
-        """Remove tombstoned docs from a flat-posting frame (either
-        tombstone representation)."""
-        if self.deleted_df is not None:
-            return flat.join(
-                self.deleted_df.select("doc_id"), "doc_id", "left_anti"
-            )
-        if self.deleted:
-            return flat.where(~F.col("doc_id").isin(list(self.deleted)))
-        return flat
+        """Remove tombstoned docs from a flat-posting frame."""
+        if self.deleted_df is None:
+            return flat
+        return flat.join(
+            self.deleted_df.select("doc_id"), "doc_id", "left_anti"
+        )
 
     def topk_and(
         self, query_text: str, k: int = 10, allowed: DataFrame | None = None
@@ -1934,7 +1919,7 @@ class Searcher:
         identical to ``topk_phrase_dataframe`` (the reference twin; see
         its docstring for the Lucene PhraseQuery contract); this path
         groups the COMPRESSED blocks by doc range and runs the two-pass
-        leapfrog scorer (``_make_phrase_range_scorer``): doc-level
+        leapfrog scorer (``_make_phrase_kernel``): doc-level
         intersection on the cheap streams first, position decode only for
         blocks that still hold candidates — decoded positions never cross
         an executor boundary, so a hot×hot phrase ("new york") costs one
@@ -1950,7 +1935,7 @@ class Searcher:
 
         ``slop`` (ES ``match_phrase`` slop; Lucene SloppyPhraseQuery):
         with ``slop > 0`` the per-range scorer switches to the
-        minimal-window sloppy matcher (``_make_sloppy_range_scorer`` —
+        minimal-window sloppy matcher (``_make_sloppy_kernel`` —
         unordered-within-budget, transpositions cost 2, sloppy_freq sums
         1/(1+distance) over minimal windows). Plan shape is unchanged:
         the same block pruning applies (every phrase term is still
@@ -1991,39 +1976,21 @@ class Searcher:
         for i, t in enumerate(qterms):
             offsets.setdefault(t, []).append(i)
         order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, uniq))
-        ).where(F.col("term").isin(uniq))
-        if len(uniq) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term") == order[0])
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
+        blocks = self._rare_pruned_blocks(uniq, [order[0]])
         if slop > 0:
-            scorer = _make_sloppy_range_scorer(
+            kernel = _make_sloppy_kernel(
                 idf_phrase, avgdl, k, self.range_bits, order,
                 [(t, i) for i, t in enumerate(qterms)], slop, True,
-                self.deleted, allowed_present=allowed is not None,
-                cogrouped=side is not None, skip_acc=skip_acc,
             )
         else:
-            scorer = _make_phrase_range_scorer(
-                idf_phrase, avgdl, k, self.range_bits, order, offsets,
-                self.deleted, allowed_present=allowed is not None,
-                cogrouped=side is not None, skip_acc=skip_acc,
+            kernel = _make_phrase_kernel(
+                idf_phrase, avgdl, k, self.range_bits, order, offsets
             )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS, "pos_bytes"),
+            self._side_frame(allowed, excluded), meta, kernel,
+            allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_phrase_dataframe(
@@ -2193,30 +2160,15 @@ class Searcher:
         for i, t in enumerate(qterms):
             offsets.setdefault(t, []).append(i)
         order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, uniq))
-        ).where(F.col("term").isin(uniq))
-        if len(uniq) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term") == order[0])
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(None, None)
-        scorer = _make_phrase_range_scorer(
+        blocks = self._rare_pruned_blocks(uniq, [order[0]])
+        kernel = _make_phrase_kernel(
             idf_phrase, self.avgdl, 1 << self.range_bits, self.range_bits,
-            order, offsets, self.deleted,
-            cogrouped=side is not None,
+            order, offsets,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
+        return self._run_per_range(
+            blocks.select(*_SCORE_COLS, "pos_bytes"), self._side_frame(None),
+            meta, kernel,
         )
-        if side is not None:
-            return grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        return grouped.applyInPandas(scorer, TOPK_SCHEMA)
 
     # ---------------- ES bool query (compositional DSL) ----------------
 
@@ -2854,7 +2806,7 @@ class Searcher:
         top-k, so page N costs O(N·k) heap + transfer per range. The
         cursor version keeps only k: θ runs over docs provably BELOW the
         cursor (partial + remaining-upper-bound < after_score — see
-        ``_make_range_scorer``'s cursor contract for the exactness
+        ``_make_blockmax_kernel``'s cursor contract for the exactness
         argument; the θ₀ probe seeds it corpus-wide the same way), and
         each range emits at most k rows whatever the depth. Decode volume
         is the information-theoretic floor either way — the kth-best
@@ -2878,21 +2830,13 @@ class Searcher:
             0.0 if allowed is not None or excluded is not None
             else self._seed_theta0(idfs, meta, blocks, k, cursor=after)
         )
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_range_scorer(
-            idfs, self.avgdl, k, self.range_bits, self.deleted,
-            cogrouped=side is not None, skip_acc=skip_acc, theta0=theta0,
-            allowed_present=allowed is not None, cursor=after,
+        kernel = _make_blockmax_kernel(
+            idfs, self.avgdl, k, self.range_bits, theta0=theta0, cursor=after
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS), side, meta
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS), self._side_frame(allowed, excluded),
+            meta, kernel, allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def sort_by(
@@ -5181,7 +5125,7 @@ class Searcher:
         degenerates to the exact phrase). Plan shape is ``topk_phrase``'s:
         compressed blocks group by doc range, every term's blocks
         semi-join the rarest term's range_ids (block metadata only), and
-        the per-range scorer (``_make_near_range_scorer``) intersects
+        the per-range scorer (``_make_near_kernel``) intersects
         doc-level candidates on the cheap streams before decoding any
         position stream — so a hot×hot proximity query never ships or
         decodes positions for docs that can't hold all terms, at any df.
@@ -5197,31 +5141,15 @@ class Searcher:
             return _empty_topk(self.spark)
         idf_q = sum(lucene_idf(self.n_docs, meta[t][0]) for t in qterms)
         order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, uniq))
-        ).where(F.col("term").isin(uniq))
-        if len(uniq) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term") == order[0])
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_near_range_scorer(
-            idf_q, self.avgdl, k, self.range_bits, order, qterms, gap,
-            self.deleted, allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
+        blocks = self._rare_pruned_blocks(uniq, [order[0]])
+        kernel = _make_near_kernel(
+            idf_q, self.avgdl, k, self.range_bits, order, qterms, gap
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS, "pos_bytes"),
+            self._side_frame(allowed, excluded), meta, kernel,
+            allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_near_unordered(
@@ -5241,7 +5169,7 @@ class Searcher:
         matchWidth — ``(max_pos − min_pos) − (n_terms − 1)`` — and
         sloppy_freq sums 1/(1+distance); full semantics and the
         vectorized minimal-window sweep are documented on
-        ``_make_sloppy_range_scorer`` (ordered=False). Duplicate query
+        ``_make_sloppy_kernel`` (ordered=False). Duplicate query
         terms collapse to one slot (documented deviation: Lucene spans
         would require distinct occurrences). idf sums over the distinct
         slots. Plan shape, block pruning, tombstone/filter cogrouping and
@@ -5256,32 +5184,16 @@ class Searcher:
             return _empty_topk(self.spark)
         idf_q = sum(lucene_idf(self.n_docs, meta[t][0]) for t in uniq)
         order = sorted(uniq, key=lambda t: (meta[t][0], t))
-        blocks = self.postings.where(
-            F.col("bucket").isin(_term_buckets(self.spark, uniq))
-        ).where(F.col("term").isin(uniq))
-        if len(uniq) > 1:
-            rare_ranges = (
-                blocks.where(F.col("term") == order[0])
-                .select("range_id")
-                .distinct()
-            )
-            blocks = blocks.join(rare_ranges, "range_id", "left_semi")
-        side = self._side_frame(allowed, excluded)
-        scorer = _make_sloppy_range_scorer(
+        blocks = self._rare_pruned_blocks(uniq, [order[0]])
+        kernel = _make_sloppy_kernel(
             idf_q, self.avgdl, k, self.range_bits, order,
             [(t, 0) for t in uniq], slop, False,
-            self.deleted, allowed_present=allowed is not None,
-            cogrouped=side is not None, skip_acc=skip_acc,
         )
-        grouped, side_g = self._group_by_range(
-            blocks.select(*_SCORE_COLS, "pos_bytes"), side, meta
+        local = self._run_per_range(
+            blocks.select(*_SCORE_COLS, "pos_bytes"),
+            self._side_frame(allowed, excluded), meta, kernel,
+            allowed is not None, skip_acc,
         )
-        if side is not None:
-            local = grouped.cogroup(side_g).applyInPandas(
-                scorer, TOPK_SCHEMA
-            )
-        else:
-            local = grouped.applyInPandas(scorer, TOPK_SCHEMA)
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_near_dataframe(
@@ -5432,52 +5344,67 @@ def _empty_topk_pdf() -> pd.DataFrame:
     )
 
 
+def _topk_rows(
+    local: np.ndarray, scores: np.ndarray, base: int, k: int
+) -> pd.DataFrame:
+    """The range's top-k rows: (score desc, doc_id asc) over the local
+    doc slots ``local`` and their final ``scores``."""
+    order_idx = np.lexsort((local, -scores))[:k]
+    return pd.DataFrame(
+        {
+            "doc_id": (local[order_idx] + base).astype("int64"),
+            "score": scores[order_idx],
+        }
+    )
+
+
 def _range_masks(
     base: int,
     range_size: int,
-    dead: frozenset,
-    allow_ids: np.ndarray | None,
-) -> tuple[np.ndarray | None, np.ndarray | None, bool]:
-    """(dead bitmap, allow bitmap, range_is_empty) for one doc range.
-    ``range_is_empty`` is True when an allow-list is active but no allowed
-    doc falls in this range — the scorer returns without decoding."""
-    del_mask = None
-    if dead:
-        local_del = np.fromiter(dead, dtype=np.int64) - base
-        local_del = local_del[(local_del >= 0) & (local_del < range_size)]
-        if len(local_del):
-            del_mask = np.zeros(range_size, dtype=bool)
-            del_mask[local_del] = True
-    allow_mask = None
-    if allow_ids is not None:
-        local_allow = np.asarray(allow_ids, dtype=np.int64) - base
-        local_allow = local_allow[(local_allow >= 0) & (local_allow < range_size)]
-        if not len(local_allow):
-            return del_mask, None, True
+    dead: np.ndarray | None,
+    allow: np.ndarray | None,
+) -> tuple[np.ndarray | None, np.ndarray | None]:
+    """(dead bitmap, allow bitmap) for one doc range from the kernel's
+    ``dead`` / ``allow`` doc_id arrays (every id lies in the range: the
+    chassis keys side rows by range_id). No dead ids → no dead bitmap;
+    ``allow=None`` → no allow-list."""
+    del_mask = allow_mask = None
+    if dead is not None and len(dead):
+        del_mask = np.zeros(range_size, dtype=bool)
+        del_mask[np.asarray(dead, dtype=np.int64) - base] = True
+    if allow is not None:
         allow_mask = np.zeros(range_size, dtype=bool)
-        allow_mask[local_allow] = True
-    return del_mask, allow_mask, False
+        allow_mask[np.asarray(allow, dtype=np.int64) - base] = True
+    return del_mask, allow_mask
 
 
-def _make_range_scorer(
+def _live_mask(
+    base: int,
+    range_size: int,
+    dead: np.ndarray | None,
+    allow: np.ndarray | None,
+) -> np.ndarray | None:
+    """Bitmap of the range's live, allowed slots (None = every slot) — the
+    starting candidate set of the candidate-driven kernels."""
+    del_mask, allow_mask = _range_masks(base, range_size, dead, allow)
+    if del_mask is None:
+        return allow_mask
+    return ~del_mask if allow_mask is None else (allow_mask & ~del_mask)
+
+
+def _make_blockmax_kernel(
     idfs: dict[str, float],
     avgdl: float,
     k: int,
     range_bits: int,
-    deleted: frozenset,
-    cogrouped: bool = False,
-    skip_acc=None,
     theta0: float = 0.0,
-    allowed_present: bool = False,
-    allow_ids: np.ndarray | None = None,
     tie_breaker: float | None = None,
     avgdls: dict[str, float] | None = None,
     groups: dict[str, int] | None = None,
     cursor: tuple[float, int] | None = None,
 ):
-    """Exact MaxScore/block-max scorer for one doc range (applyInPandas;
-    with ``cogrouped=True`` the second frame carries this range's
-    tombstoned doc_ids).
+    """Exact MaxScore/block-max kernel for one doc range (run by
+    ``Searcher._run_per_range``).
 
     Tombstones are masked **at block-decode time** (before any score is
     accumulated), so the skip threshold θ and every partial sum are
@@ -5504,7 +5431,7 @@ def _make_range_scorer(
       for all remaining blocks of that term (early break);
     * a block is skipped only when max(total over its doc span) + idf·ub +
       Σ remaining-term upper bounds < θ − eps: no doc in it can enter the
-      local top-k. ``skip_acc`` (a SparkContext accumulator) counts skips.
+      local top-k. Skipped blocks are returned as ``blocks_skipped``.
 
     ``avgdls`` (multi-field): per-TERM average field length — a prefixed
     term's postings carry its own field's dl stream, so length
@@ -5543,44 +5470,15 @@ def _make_range_scorer(
     eps = 1e-9
     _THETA_REFRESH = 8  # blocks between within-term θ refreshes
 
-    def score_range_cogrouped(
-        key: tuple, pdf: pd.DataFrame, side: pd.DataFrame
-    ) -> pd.DataFrame:
-        # side rows: tombstones (kind=0) ∪ allow-list (kind=1), this range
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()  # nothing allowed in this range
-        local = _make_range_scorer(
-            idfs,
-            avgdl,
-            k,
-            range_bits,
-            dead,
-            skip_acc=skip_acc,
-            theta0=theta0,
-            allow_ids=allow,
-            tie_breaker=tie_breaker,
-            avgdls=avgdls,
-            groups=groups,
-            cursor=cursor,
-        )
-        return local(key, pdf)
-
-    if cogrouped:
-        return score_range_cogrouped
-
-    def score_range(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (range_id,) = key
+    def score_range(
+        range_id: int,
+        pdf: pd.DataFrame,
+        dead: np.ndarray | None,
+        allow: np.ndarray | None,
+    ) -> tuple[pd.DataFrame, int]:
         base = int(range_id) << range_bits
         # local bitmaps: tombstoned / allowed slots (decode-time masks)
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, deleted, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
+        del_mask, allow_mask = _range_masks(base, range_size, dead, allow)
         # per-term average field length (multi-field: a prefixed term's dl
         # stream is its FIELD's lengths, normalized by that field's avgdl)
         adl_of = (
@@ -5737,9 +5635,6 @@ def _make_range_scorer(
                 gacc[g_t] += arr
             theta = max(theta, kth_partial(None, rest_in=suffix[i + 1]))
 
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
-
         # deterministic final accumulation: sorted-term order (oracle parity)
         final = np.zeros(range_size, dtype=np.float64)
         fmx = np.zeros(range_size, dtype=np.float64) if mx is not None else None
@@ -5773,34 +5668,21 @@ def _make_range_scorer(
             )
             nz = nz[keep]
         if len(nz) == 0:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        scores = final[nz]
-        order_idx = np.lexsort((nz, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": (nz[order_idx] + base).astype("int64"),
-                "score": scores[order_idx],
-            }
-        )
+            return _empty_topk_pdf(), skipped
+        return _topk_rows(nz, final[nz], base, k), skipped
 
     return score_range
 
 
-def _make_conjunctive_range_scorer(
+def _make_conjunctive_kernel(
     idfs: dict[str, float],
     avgdl: float,
     k: int,
     range_bits: int,
     term_order: list[str],
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Candidate-driven conjunctive scorer for one doc range
-    (``Searcher.topk_blockmax_and``; applyInPandas over blocks grouped by
-    range_id, optionally cogrouped with the tombstone/allow side frame).
+    """Candidate-driven conjunctive kernel for one doc range
+    (``Searcher.topk_blockmax_and``).
 
     Exactness: only docs that match EVERY term in ``term_order`` (and
     survive the dead/allow masks) are returned, with full BM25 sums
@@ -5813,8 +5695,8 @@ def _make_conjunctive_range_scorer(
     * terms processed in global-df-ascending order; after the first term
       the candidate bitmap C bounds every later decode: a block whose
       [first_doc, last_doc] span holds no candidate is skipped undecoded
-      (counted in ``skip_acc``), decoded postings are masked to C, and
-      C intersects down after each term;
+      (counted in ``blocks_skipped``), decoded postings are masked to C,
+      and C intersects down after each term;
     * C empty at any point ⇒ early return.
     """
     range_size = 1 << range_bits
@@ -5822,28 +5704,17 @@ def _make_conjunctive_range_scorer(
     def _score(
         range_id: int,
         pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
+        dead: np.ndarray | None,
+        allow: np.ndarray | None,
+    ) -> tuple[pd.DataFrame, int]:
         if len(pdf) == 0 or set(pdf["term"].tolist()) != set(term_order):
-            return _empty_topk_pdf()  # a required term absent from range
+            return _empty_topk_pdf(), 0  # a required term absent from range
         base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
         # candidates-so-far: None = unrestricted (first term, no masks)
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+        C = _live_mask(base, range_size, dead, allow)
         skipped = 0
         per_term: dict[str, np.ndarray] = {}
         by_term = {t: g for t, g in pdf.groupby("term")}
-
-        def _flush_skips() -> None:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
 
         for t in term_order:
             idf = idfs[t]
@@ -5868,55 +5739,29 @@ def _make_conjunctive_range_scorer(
                 arr[idx] = idf * codec.tf_norm(tfs, dls, avgdl)
                 newC[idx] = True
             if not newC.any():
-                _flush_skips()
-                return _empty_topk_pdf()
+                return _empty_topk_pdf(), skipped
             per_term[t] = arr
             C = newC
-        _flush_skips()
         # deterministic final accumulation: sorted-term order (oracle parity)
         final = np.zeros(range_size, dtype=np.float64)
         for t in sorted(per_term):
             final += per_term[t]
         nz = np.flatnonzero(C)
-        scores = final[nz]
-        order_idx = np.lexsort((nz, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": (nz[order_idx] + base).astype("int64"),
-                "score": scores[order_idx],
-            }
-        )
+        return _topk_rows(nz, final[nz], base, k), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return _score
 
 
-def _make_phrase_range_scorer(
+def _make_phrase_kernel(
     idf_phrase: float,
     avgdl: float,
     k: int,
     range_bits: int,
     term_order: list[str],
     offsets: dict[str, list[int]],
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Positional block-max phrase scorer for one doc range
-    (``Searcher.topk_phrase``; applyInPandas over blocks grouped by
-    range_id, optionally cogrouped with the tombstone/allow side frame).
+    """Positional block-max phrase kernel for one doc range
+    (``Searcher.topk_phrase``).
 
     The leapfrog analogue of Lucene's exact PhraseQuery, vectorized:
 
@@ -5950,27 +5795,18 @@ def _make_phrase_range_scorer(
     def _score(
         range_id: int,
         pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
+        dead: np.ndarray | None,
+        allow: np.ndarray | None,
+    ) -> tuple[pd.DataFrame, int]:
         if len(pdf) == 0 or set(pdf["term"].tolist()) != set(term_order):
-            return _empty_topk_pdf()  # a required term absent from range
+            return _empty_topk_pdf(), 0  # a required term absent from range
         base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
         C, dl_arr, kept, skipped = _pass1_intersect(
-            pdf, term_order, base, range_size, C
+            pdf, term_order, base, range_size,
+            _live_mask(base, range_size, dead, allow),
         )
         if C is None:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-            return _empty_topk_pdf()
+            return _empty_topk_pdf(), skipped
         # pass 2: positional intersection over final candidates only
         running: np.ndarray | None = None
         for t in term_order:
@@ -6004,9 +5840,7 @@ def _make_phrase_range_scorer(
                 if kt is not None and len(kt):
                     parts.append(kt)
             if not parts:
-                if skip_acc is not None and skipped:
-                    skip_acc.add(skipped)
-                return _empty_topk_pdf()
+                return _empty_topk_pdf(), skipped
             term_keys = np.concatenate(parts)
             running = (
                 term_keys
@@ -6014,44 +5848,24 @@ def _make_phrase_range_scorer(
                 else np.intersect1d(running, term_keys, assume_unique=True)
             )
             if not len(running):
-                if skip_acc is not None and skipped:
-                    skip_acc.add(skipped)
-                return _empty_topk_pdf()
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
+                return _empty_topk_pdf(), skipped
         docs, ptf = np.unique(running >> 32, return_counts=True)
         return _finish_positional_topk(
             docs, ptf.astype(np.float64), dl_arr, base, idf_phrase, avgdl, k
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return _score
 
 
-def _make_msm_range_scorer(
+def _make_msm_kernel(
     idfs: dict[str, float],
     avgdl: float,
     k: int,
     range_bits: int,
     term_order: list[str],
     msm: int,
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Counting generalization of ``_make_conjunctive_range_scorer`` for
+    """Counting generalization of ``_make_conjunctive_kernel`` for
     ``Searcher.topk_msm`` (1 < msm < n_terms): per doc range, terms are
     processed in global-df-ascending order while a per-doc match count
     accumulates; once the remaining terms can no longer lift a NEW doc to
@@ -6070,31 +5884,20 @@ def _make_msm_range_scorer(
     def _score(
         range_id: int,
         pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
+        dead: np.ndarray | None,
+        allow: np.ndarray | None,
+    ) -> tuple[pd.DataFrame, int]:
         present = set(pdf["term"].tolist())
         if len(pdf) == 0 or len(present & set(term_order)) < msm:
-            return _empty_topk_pdf()  # range can't hold an msm match
+            return _empty_topk_pdf(), 0  # range can't hold an msm match
         base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
         # M: the static live/allowed mask (None = everything live)
-        M: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            M = ~del_mask if M is None else (M & ~del_mask)
+        M = _live_mask(base, range_size, dead, allow)
         skipped = 0
         cnt = np.zeros(range_size, dtype=np.int32)
         per_term: dict[str, np.ndarray] = {}
         by_term = {t: g for t, g in pdf.groupby("term")}
         C: np.ndarray | None = None  # viable set once counting binds
-
-        def _flush_skips() -> None:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
 
         for i, t in enumerate(term_order):
             # absent terms still advance i: viability math counts them as
@@ -6130,54 +5933,29 @@ def _make_msm_range_scorer(
             if need_now >= 1:
                 C = cnt >= need_now
                 if not C.any():
-                    _flush_skips()
-                    return _empty_topk_pdf()
-        _flush_skips()
+                    return _empty_topk_pdf(), skipped
         matched = cnt >= msm
         if not matched.any():
-            return _empty_topk_pdf()
+            return _empty_topk_pdf(), skipped
         # deterministic final accumulation: sorted-term order (oracle parity)
         final = np.zeros(range_size, dtype=np.float64)
         for t in sorted(per_term):
             final += per_term[t]
         nz = np.flatnonzero(matched)
-        scores = final[nz]
-        order_idx = np.lexsort((nz, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": (nz[order_idx] + base).astype("int64"),
-                "score": scores[order_idx],
-            }
-        )
+        return _topk_rows(nz, final[nz], base, k), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return _score
 
 
-def _make_multiphrase_range_scorer(
+def _make_multiphrase_kernel(
     idf_q: float,
     avgdl: float,
     k: int,
     range_bits: int,
     groups: list[list[str]],
     slots: list[tuple[int, list[str]]],
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Generalized positional block-max scorer for per-slot term SETS
+    """Generalized positional block-max kernel for per-slot term SETS
     (``Searcher.topk_phrase_prefix``; Lucene MultiPhraseQuery): a doc
     matches when every query offset ``i`` in ``slots`` holds SOME member
     of its term set at position ``start + i``.
@@ -6202,32 +5980,20 @@ def _make_multiphrase_range_scorer(
     def _score(
         range_id: int,
         pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
+        dead: np.ndarray | None,
+        allow: np.ndarray | None,
+    ) -> tuple[pd.DataFrame, int]:
         present = set(pdf["term"].tolist())
         if len(pdf) == 0 or any(not (present & set(g)) for g in groups):
-            return _empty_topk_pdf()  # some required group absent
+            return _empty_topk_pdf(), 0  # some required group absent
         base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+        C = _live_mask(base, range_size, dead, allow)
         skipped = 0
         by_term = {
             t: g.sort_values("first_doc") for t, g in pdf.groupby("term")
         }
         dl_arr = np.zeros(range_size, dtype=np.int64)
         kept: dict[str, list[tuple]] = {}
-
-        def _flush_empty() -> pd.DataFrame:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-            return _empty_topk_pdf()
 
         for g in groups:
             newC = np.zeros(range_size, dtype=bool)
@@ -6262,7 +6028,7 @@ def _make_multiphrase_range_scorer(
                     rows.append((row.pos_bytes, idx, tfs))
                 kept[t] = rows
             if not newC.any():
-                return _flush_empty()
+                return _empty_topk_pdf(), skipped
             C = newC
         # pass 2: per-slot positional keys over final candidates only
         running: np.ndarray | None = None
@@ -6291,7 +6057,7 @@ def _make_multiphrase_range_scorer(
                     if len(keys):
                         parts.append(keys)
             if not parts:
-                return _flush_empty()
+                return _empty_topk_pdf(), skipped
             slot_keys = np.concatenate(parts)
             if len(parts) > 1:
                 slot_keys.sort()  # cross-term/cross-block concat order
@@ -6301,27 +6067,13 @@ def _make_multiphrase_range_scorer(
                 else np.intersect1d(running, slot_keys, assume_unique=True)
             )
             if not len(running):
-                return _flush_empty()
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
+                return _empty_topk_pdf(), skipped
         docs, ptf = np.unique(running >> 32, return_counts=True)
         return _finish_positional_topk(
             docs, ptf.astype(np.float64), dl_arr, base, idf_q, avgdl, k
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return _score
 
 
 def _pass1_intersect(
@@ -6402,16 +6154,10 @@ def _finish_positional_topk(
         idf_q * tf_f * (codec.K1 + 1.0)
         / (tf_f + codec.K1 * (1.0 - codec.B + codec.B * dls_f / avgdl))
     )
-    order_idx = np.lexsort((docs, -scores))[:k]
-    return pd.DataFrame(
-        {
-            "doc_id": (docs[order_idx] + base).astype("int64"),
-            "score": scores[order_idx],
-        }
-    )
+    return _topk_rows(docs, scores, base, k)
 
 
-def _make_near_range_scorer(
+def _make_near_kernel(
     idf_q: float,
     avgdl: float,
     k: int,
@@ -6419,14 +6165,10 @@ def _make_near_range_scorer(
     term_order: list[str],
     qterms: list[str],
     gap: int,
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Positional block-max ordered-proximity scorer for one doc range
+    """Positional block-max ordered-proximity kernel for one doc range
     (``Searcher.topk_near``; the span_near(in_order=true) analogue of
-    ``_make_phrase_range_scorer``, sharing its pass-1 doc intersection).
+    ``_make_phrase_kernel``, sharing its pass-1 doc intersection).
 
     Pass 2 is the weighted-chain dynamic program of the DataFrame twin
     (``topk_near_dataframe``), vectorized across ALL candidate docs at
@@ -6445,59 +6187,21 @@ def _make_near_range_scorer(
     def _score(
         range_id: int,
         pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
+        dead: np.ndarray | None,
+        allow: np.ndarray | None,
+    ) -> tuple[pd.DataFrame, int]:
         if len(pdf) == 0 or set(pdf["term"].tolist()) != set(term_order):
-            return _empty_topk_pdf()  # a required term absent from range
+            return _empty_topk_pdf(), 0  # a required term absent from range
         base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
         C, dl_arr, kept, skipped = _pass1_intersect(
-            pdf, term_order, base, range_size, C
+            pdf, term_order, base, range_size,
+            _live_mask(base, range_size, dead, allow),
         )
-
-        def _flush_empty() -> pd.DataFrame:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-            return _empty_topk_pdf()
-
         if C is None:
-            return _flush_empty()
-        # pass 2a: occurrence keys per unique term, candidates only —
-        # the position stream decodes IF the block still holds candidates
-        occ: dict[str, np.ndarray] = {}
-        for t in term_order:
-            parts = []
-            for pos_bytes, idx, tfs in kept[t]:
-                live = C[idx]
-                if not live.any():
-                    skipped += 1  # pos stream never decoded
-                    continue
-                if len(pos_bytes) == 0 and tfs.sum() > 0:
-                    raise ValueError(
-                        "posting block has no position stream — the index "
-                        "was built with positions=False; rebuild with "
-                        "build_index(..., positions=True) for proximity "
-                        "queries"
-                    )
-                flat, _ = codec.unpack_positions(pos_bytes, tfs)
-                occ_doc = np.repeat(idx, tfs).astype(np.int64)
-                occ_live = np.repeat(live, tfs)
-                keys = (occ_doc[occ_live] << 32) | flat[occ_live].astype(
-                    np.int64
-                )
-                if len(keys):
-                    parts.append(keys)
-            if not parts:
-                return _flush_empty()
-            occ[t] = np.concatenate(parts)
+            return _empty_topk_pdf(), skipped
+        occ, skipped = _occurrence_keys(term_order, kept, C, skipped)
+        if occ is None:
+            return _empty_topk_pdf(), skipped
         # pass 2b: chain DP in query-position order, all docs at once
         prev_keys = occ[qterms[0]]
         prev_w = np.ones(len(prev_keys), dtype=np.int64)
@@ -6515,29 +6219,55 @@ def _make_near_range_scorer(
             w = cw[hi] - cw[lo]
             m = w > 0
             if not m.any():
-                return _flush_empty()
+                return _empty_topk_pdf(), skipped
             prev_keys, prev_w = cur[m], w[m]
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
         docs, inv = np.unique(prev_keys >> 32, return_inverse=True)
         chain = np.bincount(inv, weights=prev_w.astype(np.float64))
         return _finish_positional_topk(
             docs, chain, dl_arr, base, idf_q, avgdl, k
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
+    return _score
 
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
 
-    return cg if cogrouped else plain
+def _occurrence_keys(
+    term_order: list[str],
+    kept: dict[str, list[tuple]],
+    C: np.ndarray,
+    skipped: int,
+) -> tuple[dict[str, np.ndarray] | None, int]:
+    """Pass 2a of the proximity kernels (near + sloppy): per unique term,
+    the int64 occurrence keys ``local_doc << 32 | pos`` of the final
+    candidates ``C`` — sorted by construction (``kept`` blocks arrive in
+    first_doc order, positions ascend within a doc). A block's position
+    stream decodes only IF it still holds candidates; the others add to
+    ``skipped``. Returns ``(None, skipped)`` when some term keeps no
+    occurrence (no doc can match)."""
+    occ: dict[str, np.ndarray] = {}
+    for t in term_order:
+        parts = []
+        for pos_bytes, idx, tfs in kept[t]:
+            live = C[idx]
+            if not live.any():
+                skipped += 1  # pos stream never decoded
+                continue
+            if len(pos_bytes) == 0 and tfs.sum() > 0:
+                raise ValueError(
+                    "posting block has no position stream — the index "
+                    "was built with positions=False; rebuild with "
+                    "build_index(..., positions=True) for proximity "
+                    "queries"
+                )
+            flat, _ = codec.unpack_positions(pos_bytes, tfs)
+            occ_doc = np.repeat(idx, tfs).astype(np.int64)
+            occ_live = np.repeat(live, tfs)
+            keys = (occ_doc[occ_live] << 32) | flat[occ_live].astype(np.int64)
+            if len(keys):
+                parts.append(keys)
+        if not parts:
+            return None, skipped
+        occ[t] = np.concatenate(parts)
+    return occ, skipped
 
 
 # slop is capped so the scaled-integer sloppy_freq (Σ LCM(1..slop+1)/(1+d))
@@ -6553,7 +6283,7 @@ def _slop_lcm(slop: int) -> int:
     return math.lcm(*range(1, slop + 2))
 
 
-def _make_sloppy_range_scorer(
+def _make_sloppy_kernel(
     idf_q: float,
     avgdl: float,
     k: int,
@@ -6562,16 +6292,12 @@ def _make_sloppy_range_scorer(
     slots: list[tuple[str, int]],
     slop: int,
     ordered: bool,
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
 ):
-    """Positional block-max scorer for sloppy / unordered proximity over
+    """Positional block-max kernel for sloppy / unordered proximity over
     one doc range — backs ``Searcher.topk_phrase(slop>0)`` (ES
     ``match_phrase`` + ``slop``; Lucene SloppyPhraseQuery) and
     ``Searcher.topk_near_unordered`` (ES ``span_near(in_order=false)``).
-    Same chassis as ``_make_phrase_range_scorer``: pass 1 is the shared
+    Same shape as ``_make_phrase_kernel``: pass 1 is the shared
     ``_pass1_intersect`` doc-level conjunction on the cheap streams (every
     slot term is still REQUIRED — sloppiness relaxes adjacency, not
     membership), pass 2 decodes positions for surviving candidates only
@@ -6623,61 +6349,21 @@ def _make_sloppy_range_scorer(
     def _score(
         range_id: int,
         pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
+        dead: np.ndarray | None,
+        allow: np.ndarray | None,
+    ) -> tuple[pd.DataFrame, int]:
         if len(pdf) == 0 or set(pdf["term"].tolist()) != set(term_order):
-            return _empty_topk_pdf()  # a required term absent from range
+            return _empty_topk_pdf(), 0  # a required term absent from range
         base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
         C, dl_arr, kept, skipped = _pass1_intersect(
-            pdf, term_order, base, range_size, C
+            pdf, term_order, base, range_size,
+            _live_mask(base, range_size, dead, allow),
         )
-
-        def _flush_empty() -> pd.DataFrame:
-            if skip_acc is not None and skipped:
-                skip_acc.add(skipped)
-            return _empty_topk_pdf()
-
         if C is None:
-            return _flush_empty()
-        # pass 2a: occurrence keys per unique term, candidates only (the
-        # position stream decodes IF the block still holds candidates)
-        occ: dict[str, np.ndarray] = {}
-        for t in term_order:
-            parts = []
-            for pos_bytes, idx, tfs in kept[t]:
-                live = C[idx]
-                if not live.any():
-                    skipped += 1  # pos stream never decoded
-                    continue
-                if len(pos_bytes) == 0 and tfs.sum() > 0:
-                    raise ValueError(
-                        "posting block has no position stream — the index "
-                        "was built with positions=False; rebuild with "
-                        "build_index(..., positions=True) for sloppy/"
-                        "unordered proximity queries"
-                    )
-                flat, _ = codec.unpack_positions(pos_bytes, tfs)
-                occ_doc = np.repeat(idx, tfs).astype(np.int64)
-                occ_live = np.repeat(live, tfs)
-                keys = (occ_doc[occ_live] << 32) | flat[occ_live].astype(
-                    np.int64
-                )
-                if len(keys):
-                    parts.append(keys)
-            if not parts:
-                return _flush_empty()
-            occ[t] = np.concatenate(parts)
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
+            return _empty_topk_pdf(), skipped
+        occ, skipped = _occurrence_keys(term_order, kept, C, skipped)
+        if occ is None:
+            return _empty_topk_pdf(), skipped
         # pass 2b: minimal-window sweep, all docs at once. Slot keys shift
         # by (maxoff - off) ≥ 0 so adjusted positions never borrow into
         # the doc bits; a constant shift keeps each array sorted.
@@ -6697,7 +6383,7 @@ def _make_sloppy_range_scorer(
             left = np.minimum(left, np.where(ok, last, int64_max))
         events, left = events[valid], left[valid]
         if not len(events):
-            return _empty_topk_pdf()
+            return _empty_topk_pdf(), skipped
         # minimal windows = first event per distinct L (events ascend, so
         # np.unique's first-occurrence index IS min(e) per L group)
         u_left, first = np.unique(left, return_index=True)
@@ -6707,38 +6393,19 @@ def _make_sloppy_range_scorer(
         dist = np.maximum(dist, 0)
         hit = dist <= slop
         if not hit.any():
-            return _empty_topk_pdf()
+            return _empty_topk_pdf(), skipped
         w_scaled = (lcm // (1 + dist[hit])).astype(np.float64)
         docs, inv = np.unique(u_left[hit] >> 32, return_inverse=True)
         freq = np.bincount(inv, weights=w_scaled) / float(lcm)
         return _finish_positional_topk(
             docs, freq, dl_arr, base, idf_q, avgdl, k
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return _score
 
 
-def _make_constscore_range_scorer(
-    k: int,
-    range_bits: int,
-    deleted: frozenset,
-    allowed_present: bool = False,
-    cogrouped: bool = False,
-    skip_acc=None,
-):
-    """Early-terminating constant_score scorer for one doc range
+def _make_constscore_kernel(k: int, range_bits: int):
+    """Early-terminating constant_score kernel for one doc range
     (``Searcher._topk_expanded`` rewrite="constant_score"; round-4 verdict
     item 3). The result contract is the first ``k`` live/allowed DISTINCT
     doc_ids in ascending order, so per range the scan can stop exactly:
@@ -6746,7 +6413,7 @@ def _make_constscore_range_scorer(
     order; once ``k`` distinct docs are found, any later block whose
     ``first_doc`` exceeds the current kth-smallest found doc can only
     contain larger doc_ids — the remaining blocks are skipped undecoded
-    and counted in ``skip_acc``. Within the scan, blocks whose doc span
+    and counted in ``blocks_skipped``. Within the scan, blocks whose doc span
     holds no still-eligible doc (tombstoned / outside the allow-list)
     skip undecoded too. Each range emits at most ``k`` rows; the global
     ``orderBy(doc_id).limit(k)`` is a TakeOrdered over ≤ k·n_ranges tiny
@@ -6758,20 +6425,13 @@ def _make_constscore_range_scorer(
     def _score(
         range_id: int,
         pdf: pd.DataFrame,
-        dead: frozenset,
-        allow_ids: np.ndarray | None,
-    ) -> pd.DataFrame:
+        dead: np.ndarray | None,
+        allow: np.ndarray | None,
+    ) -> tuple[pd.DataFrame, int]:
         if len(pdf) == 0:
-            return _empty_topk_pdf()
+            return _empty_topk_pdf(), 0
         base = int(range_id) << range_bits
-        del_mask, allow_mask, range_empty = _range_masks(
-            base, range_size, dead, allow_ids
-        )
-        if range_empty:
-            return _empty_topk_pdf()
-        C: np.ndarray | None = allow_mask
-        if del_mask is not None:
-            C = ~del_mask if C is None else (C & ~del_mask)
+        C = _live_mask(base, range_size, dead, allow)
         found = np.zeros(range_size, dtype=bool)
         n_found = 0
         kth = range_size  # local index of the kth-smallest found doc
@@ -6799,28 +6459,12 @@ def _make_constscore_range_scorer(
                 n_found += len(new)
                 if n_found >= k:
                     kth = int(np.flatnonzero(found)[k - 1])
-        if skip_acc is not None and skipped:
-            skip_acc.add(skipped)
         nz = np.flatnonzero(found)[:k]
-        if not len(nz):
-            return _empty_topk_pdf()
         return pd.DataFrame(
             {
                 "doc_id": (nz + base).astype("int64"),
                 "score": np.ones(len(nz), dtype=np.float64),
             }
-        )
+        ), skipped
 
-    def plain(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(key[0], pdf, deleted, None)
-
-    def cg(key: tuple, pdf: pd.DataFrame, side: pd.DataFrame) -> pd.DataFrame:
-        dead = frozenset(side.loc[side["kind"] == 0, "doc_id"].tolist()) | deleted
-        allow = None
-        if allowed_present:
-            allow = side.loc[side["kind"] == 1, "doc_id"].to_numpy(np.int64)
-            if len(allow) == 0:
-                return _empty_topk_pdf()
-        return _score(key[0], pdf, dead, allow)
-
-    return cg if cogrouped else plain
+    return _score

@@ -318,11 +318,11 @@ class IndexStore:
                 "filter empty batches before save/upsert"
             )
 
-        # AQE ON for the duration of the save (restored after): the session
-        # default is off because short interactive queries pay a driver
-        # re-plan round per Exchange for nothing (session.py), but the save
-        # is the opposite regime — a handful of LONG write jobs whose
-        # shuffle outputs (dictionary/metrics rollups, the bucket
+        # AQE ON for the duration of the save (restored after): sessions
+        # run with AQE on unless they opted out (SPARK_GRAFT_AQE=0 —
+        # session.py), and the save needs it whatever the session chose.
+        # The save is the regime AQE is built for — a handful of LONG write
+        # jobs whose shuffle outputs (dictionary/metrics rollups, the bucket
         # repartition ahead of partitionBy) are far smaller than the
         # session-wide partition count sized for the build's occurrence
         # volume. AQE's partition coalescing right-sizes every write's task
@@ -334,7 +334,9 @@ class IndexStore:
         # runtime SQL conf on the shared session: save's own writer
         # threads all want it on, and callers are not expected to run
         # latency-critical queries concurrently with a segment save.
-        prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "false")
+        # no fallback: on a session that never set the key, Spark resolves
+        # the entry's own default, so the restore cannot turn AQE off
+        prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled")
         self.spark.conf.set("spark.sql.adaptive.enabled", "true")
         try:
             self._save_stages(built, segment, resume)

@@ -424,11 +424,13 @@ def lsh_candidate_pairs(
     """
     # Band key: xxhash64 over (band index, the band's signature slots) —
     # an 8-byte long, not an md5 hex STRING (32 chars ≈ 5x the key bytes
-    # on the banding shuffle). Any injective-enough digest yields the
-    # SAME bucket equivalence classes (docs collide iff their slot tuples
-    # are equal), so candidate pairs are unchanged; multi-column xxhash64
-    # is unambiguous without a separator. A cross-band collision cannot
-    # conflate bands because the band index is hashed in.
+    # on the banding shuffle). Docs with equal slot tuples always share
+    # the band key; docs with different tuples share it only on a 64-bit
+    # hash collision, which can add a false candidate pair (about
+    # n²·2⁻⁶⁵ expected per band over n docs) but never drops a true one.
+    # Multi-column xxhash64 is unambiguous without a separator, and the
+    # hashed-in band index keeps equal tuples of different bands apart
+    # (up to the same collision odds).
     band_structs = F.array(
         *[
             F.xxhash64(

@@ -8,11 +8,14 @@ partition count, UTC session timezone (determinism).
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -224,7 +227,8 @@ def _warm_session(spark: SparkSession) -> None:
         IndexStore(spark, tmp + "/idx").save(built, segment=0)
         spark.conf.set("spark.rabbit.sessionWarmed", "1")
     except Exception:
-        pass  # warm-up is best-effort; never block session creation
+        # best-effort: never block session creation, but say why it failed
+        log.warning("session warm-up failed; continuing cold", exc_info=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         sc.setJobDescription(None)

@@ -1,11 +1,12 @@
 """IndexStore.save runs its write jobs with AQE enabled and restores the
 session's previous setting afterwards (store.py: the save is the
-"coalesce on write" regime; the session default stays off for short
-interactive queries — session.py).
+"coalesce on write" regime; sessions run with AQE on unless they opted
+out with SPARK_GRAFT_AQE=0 — session.py — and a session that never set
+the key keeps Spark's own default).
 
 Pins the conf contract, not the speed: the measured effect (save
-~40-80% slower without AQE's write coalescing) lives in
-tools/aqe_ab.py / OPTIMIZATION_r07.md.
+~40-80% slower without AQE's write coalescing) is recorded in
+OPTIMIZATION_r07.md.
 """
 
 import tempfile
@@ -63,3 +64,17 @@ def test_save_restores_on_failure(spark, built):
     with pytest.raises(ValueError):
         store.save(broken, segment=0)  # refuses before the toggle
     assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+
+
+def test_save_keeps_spark_default_when_unset(spark, built):
+    # a session that never set the key must still read Spark's default
+    # (on) after a save — restoring a hard-coded "false" turned AQE off
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        store = _save(spark, built)
+        assert spark.conf.get(key) == "true"
+        assert store.load().n_docs == built.n_docs
+    finally:
+        spark.conf.set(key, prev)

@@ -7,8 +7,10 @@ second identical build+save in one session runs ~2x faster on an identical
 plan). These tests pin the contract, not the speed.
 """
 
+import logging
 import time
 
+from rabbit_index_ingest_spark.index import build
 from rabbit_index_ingest_spark.session import _warm_session
 
 
@@ -32,6 +34,25 @@ def test_warm_session_opt_out(spark, monkeypatch):
         t0 = time.time()
         _warm_session(spark)
         assert time.time() - t0 < 0.5
+        assert spark.conf.get("spark.rabbit.sessionWarmed") == "0"
+    finally:
+        spark.conf.set("spark.rabbit.sessionWarmed", "1")
+
+
+def test_warm_session_failure_logs_warning(spark, monkeypatch, caplog):
+    # a failing warm-up must not block the session, but must say why
+    def boom(*args, **kwargs):
+        raise RuntimeError("synthetic build failure")
+
+    monkeypatch.delenv("SPARK_GRAFT_NO_WARM", raising=False)
+    monkeypatch.setattr(build, "build_index", boom)
+    spark.conf.set("spark.rabbit.sessionWarmed", "0")
+    try:
+        with caplog.at_level(logging.WARNING, "rabbit_index_ingest_spark"):
+            _warm_session(spark)
+        warned = [r for r in caplog.records if r.levelno == logging.WARNING]
+        assert warned and "warm-up failed" in warned[0].getMessage()
+        assert "synthetic build failure" in str(warned[0].exc_info[1])
         assert spark.conf.get("spark.rabbit.sessionWarmed") == "0"
     finally:
         spark.conf.set("spark.rabbit.sessionWarmed", "1")

@@ -175,8 +175,7 @@ def test_sloppy_scorer_slop0_parity(spark, tiny):
     from pyspark.sql import functions as F
 
     from rabbit_index_ingest_spark.index.query import (
-        TOPK_SCHEMA,
-        _make_sloppy_range_scorer,
+        _make_sloppy_kernel,
         _term_buckets,
     )
 
@@ -185,16 +184,15 @@ def test_sloppy_scorer_slop0_parity(spark, tiny):
     meta = searcher._term_meta(qterms)
     idf = sum(lucene_idf(searcher.n_docs, meta[t][0]) for t in qterms)
     order = sorted(qterms, key=lambda t: (meta[t][0], t))
-    scorer = _make_sloppy_range_scorer(
+    kernel = _make_sloppy_kernel(
         idf, searcher.avgdl, 10, searcher.range_bits, order,
-        [(t, i) for i, t in enumerate(qterms)], 0, True, frozenset()
+        [(t, i) for i, t in enumerate(qterms)], 0, True,
     )
     blocks = searcher.postings.where(
         F.col("bucket").isin(_term_buckets(spark, qterms))
     ).where(F.col("term").isin(qterms))
     got = (
-        blocks.groupBy("range_id")
-        .applyInPandas(scorer, TOPK_SCHEMA)
+        searcher._run_per_range(blocks, None, meta, kernel)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .collect()
     )
